@@ -492,6 +492,10 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** A JSON number as the bench artifacts write it, exponent included
+    * (`8.5E-4` is 0.00085 s, not 8.5 s). */
+  private val Number = "-?[0-9][0-9.]*(?:[eE][-+]?[0-9]+)?"
+
   /** Per-query seconds from the newest BENCH_r*.json that yields any — the
     * 3× rerun baseline. Self-contained regex extraction (no JSON library on
     * the runtime classpath) over the WHOLE file: every prior artifact stored
@@ -507,7 +511,7 @@ object Bench {
       .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
       .sortBy(_.getName).reverse
     val entry = java.util.regex.Pattern.compile(
-      "\\\\?\"([A-Za-z0-9_]+)\\\\?\":(-?[0-9][0-9.]*)")
+      "\\\\?\"([A-Za-z0-9_]+)\\\\?\":(" + Number + ")")
     val fromRounds = rounds.iterator.map { f =>
       try {
         val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
@@ -543,7 +547,7 @@ object Bench {
         if (close < 0) Map.empty
         else {
           val entry = java.util.regex.Pattern.compile(
-            "\"([A-Za-z0-9_]+)\":(-?[0-9][0-9.]*)")
+            "\"([A-Za-z0-9_]+)\":(" + Number + ")")
           val m = entry.matcher(text.substring(open, close))
           val out = Map.newBuilder[String, Double]
           while (m.find()) out += m.group(1) -> m.group(2).toDouble

@@ -2,59 +2,62 @@ package graft
 
 import graft.spec.{EngineConfig, SpecLoader}
 import graft.streaming.{Observability, StreamRunner}
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The deployable service — the equivalent of the reference's `main`
-  * (server.go:338-416): load config + aggregation specs, start one
-  * checkpointed Kafka→Kafka streaming query per rule, attach observability,
-  * await termination.
+  * (server.go:338-416): load config + aggregation specs, run the whole
+  * config as one checkpointed Kafka→Kafka streaming query with observability
+  * attached, and exit nonzero if the query fails, so the orchestrator
+  * restarts it.
   *
   * Usage: graft.Main [config.yaml] [aggregation-specifications.yaml]
   * (requires the spark-sql-kafka connector on the classpath and a reachable
-  * broker; every piece below the Kafka source/sink is exercised broker-free
-  * by the test suite through MemoryStream.)
+  * broker; everything below the Kafka source/sink is tested through
+  * MemoryStream.)
   */
 object Main {
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  /** The service's session settings. The shuffle partition count, which is
+    * the number of state stores per stateful operator, is the session's
+    * parallelism unless the deployment's conf (spark-submit `--conf`) sets
+    * it. Spark restores it from an existing checkpoint's offset log, so it
+    * takes effect only on a fresh checkpoint. */
+  def settings(config: EngineConfig, conf: SparkConf, defaultParallelism: Int): Map[String, String] =
+    Map("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.sql.GraftExtensions",
+      "spark.sql.streaming.stateStore.providerClass" -> config.stateStoreProviderClass,
+      ShufflePartitions -> conf.get(ShufflePartitions, defaultParallelism.toString))
+
+  def session(config: EngineConfig): SparkSession = {
+    // the parallelism is known once the context exists
+    val spark = SparkSession.builder().appName("monasca-aggregator-spark")
+      .config(settings(config, new SparkConf(), 1) - ShufflePartitions).getOrCreate()
+    val sc = spark.sparkContext
+    spark.conf.set(ShufflePartitions,
+      settings(config, sc.getConf, sc.defaultParallelism)(ShufflePartitions))
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val config = args.headOption.map(EngineConfig.load).getOrElse(EngineConfig())
-    val specsPath = args.lift(1).getOrElse("aggregation-specifications.yaml")
-    val specs = SpecLoader.loadValidated(specsPath) // fatal on invalid, like the reference
-
-    val spark = SparkSession.builder()
-      .appName("monasca-aggregator-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        config.stateStoreProviderClass)
-      .getOrCreate()
-
+    val specs = SpecLoader.loadValidated( // fatal on invalid, like the reference
+      args.lift(1).getOrElse("aggregation-specifications.yaml"))
+    val spark = session(config)
     val obs = Observability.attach(spark, config.windowSize)
-    val queries = StreamRunner.run(spark, specs,
-      servers = config.kafkaBootstrapServers,
-      inTopic = config.consumerTopic,
-      outTopic = config.producerTopic,
-      windowSizeSec = config.windowSize,
-      windowLagSec = config.windowLag,
-      checkpointRoot = config.checkpointRoot)
-
+    val Seq(query) = StreamRunner.run(spark, specs, config.kafkaBootstrapServers,
+      config.consumerTopic, config.producerTopic, config.windowSize, config.windowLag,
+      config.checkpointRoot)
     sys.addShutdownHook {
-      queries.foreach(q => scala.util.Try(q.stop()))
+      scala.util.Try(query.stop())
       println(s"counters at shutdown: ${obs.snapshot}")
     }
-    // supervision loop: a single failing rule must not take down the healthy
-    // ones — log the failure, clear the terminated set, keep serving until no
-    // query remains active. Fatal JVM errors propagate; if any rule failed by
-    // the time the service drains, exit nonzero so the orchestrator restarts.
-    var anyFailed = false
-    while (spark.streams.active.nonEmpty) {
-      try spark.streams.awaitAnyTermination()
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          anyFailed = true
-          System.err.println(s"[graft] streaming query failed: ${e.getMessage}")
-      }
-      spark.streams.resetTerminated()
+    try query.awaitTermination()
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[graft] streaming query failed: ${e.getMessage}")
+        sys.exit(1)
     }
-    if (anyFailed) sys.exit(1)
   }
 }

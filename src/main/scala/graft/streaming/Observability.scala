@@ -19,7 +19,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
   *    alert or restart instead of hard-killing the process. Terminated
   *    queries keep their counters for scraping but are never "stalled".
   *
-  * Internally keyed by query id (names are optional and may be null).
+  * Internally keyed by query id (names are optional and may be null). The
+  * service runs its whole rule config as one query, so `/metrics` carries
+  * one `query` label for it — like the reference's two unlabelled counters;
+  * per-rule counts are not exported.
   */
 class Observability(maxSilenceMs: Long) extends StreamingQueryListener {
 

@@ -3,63 +3,67 @@ package graft.streaming
 import graft.model.AggregationSpec
 import graft.plan.RuleCompiler
 import graft.sources.KafkaIO
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** Structured-Streaming execution of compiled aggregation rules — the
-  * replacement for the reference's main loop (server.go:338-416).
+/** Structured-Streaming execution of a compiled rule config — the
+  * replacement for the reference's main loop (server.go:338-416):
+  *  - windowSize ticker (server.go:204-210, 377-388, W3) →
+  *    `Trigger.ProcessingTime(windowSize)`; emission instants are not
+  *    epoch-aligned, window contents and bounds are (SURVEY.md §7.4.1);
+  *  - windowLag emission cutoff (server.go:213-218, W2) →
+  *    `withWatermark(event_ts, windowLag)` + append mode: a window is emitted
+  *    once, when the watermark passes its end, and its state evicted
+  *    (W4, server.go:291-305);
+  *  - data later than an emitted window is dropped, where the reference
+  *    re-emits a partial duplicate (SURVEY.md §2.1.4) — a deliberate divergence.
   *
-  * Mapping of the reference's timing machinery:
-  *  - windowSize ticker + firstTick alignment (server.go:204-210, 377-388, W3)
-  *    → `Trigger.ProcessingTime(windowSize)`; emission instants are not
-  *    epoch-aligned, but window contents/boundaries are identical (see
-  *    SURVEY.md §7.4.1).
-  *  - windowLag / activeTimeWindow emission cutoff (server.go:213-218, W2)
-  *    → `withWatermark(event_ts, windowLag)` + append output mode: a window is
-  *    emitted exactly once, when the watermark passes its end.
-  *  - deleteInactiveTimeWindows (server.go:291-305, W4) → automatic state-store
-  *    eviction past the watermark.
-  *  - data later than an emitted window: the reference resurrects the window
-  *    and re-emits a partial duplicate (SURVEY.md §2.1.4); we drop it —
-  *    deliberate, documented divergence.
-  *
-  * One streaming query per rule (the reference also evaluates rules
-  * independently per message, server.go:316-320); rules share the Kafka
-  * source but keep isolated state and checkpoints.
+  * The whole config is ONE query ([[RuleCompiler.compileStreaming]]): each
+  * micro-batch reads and parses the source once into one window aggregate
+  * (and a second when a rule has a rollup) — one incremental plan over one
+  * versioned state store, as in *Structured Streaming* (SIGMOD 2018).
+  * Against a query per rule:
+  *  - one watermark for all rules (latest event time of any rule less the
+  *    lag): a row more than windowLag behind another rule's events is late.
+  *    The reference, too, has one cutoff for all rules (server.go:213-218);
+  *  - one failure domain: `SpecLoader.loadValidated` rejects bad rules at
+  *    load, so failures come from the source, sink or executors, which
+  *    per-rule queries shared anyway;
+  *  - one checkpoint, `<checkpointRoot>/aggregator`, not one per rule. To
+  *    upgrade, start from the old checkpoints' last committed offsets (the
+  *    newest `offsets/` entry, as Kafka `startingOffsets`), or accept a replay
+  *    from `earliest` that re-emits windows already emitted;
+  *  - if a rule has a rollup, rules without one keep one-row identity groups
+  *    in the second aggregate's state.
   */
 object StreamRunner {
 
-  /** The same compiled stages as the batch path, with the watermark inserted
-    * between key-extraction and aggregation. Works for any envelope-schema
-    * streaming DataFrame (Kafka, MemoryStream, rate-shaped). */
-  def buildStreaming(spec: AggregationSpec, windowSizeSec: Long, windowLagSec: Long)(
-      envelopes: DataFrame): DataFrame = {
-    val prepared = RuleCompiler.prepare(spec)(envelopes)
-      .withWatermark("event_ts", s"$windowLagSec seconds")
-    val grouped = RuleCompiler.aggregate(spec, windowSizeSec)(prepared)
-    // rollup re-aggregates on the time-window column itself — a chained
-    // stateful aggregation, natively supported in append mode on Spark 3.5+
-    val finalGrouped =
-      if (spec.rollup.isDefined) RuleCompiler.rollup(spec, windowSizeSec)(grouped) else grouped
-    RuleCompiler.project(spec)(finalGrouped)
-  }
+  /** Name of the service's query and of its checkpoint directory. */
+  val QueryName = "aggregator"
 
-  /** End-to-end Kafka→Kafka deployment: one checkpointed append-mode query per
-    * rule. Equivalent of the whole reference service. */
+  /** One rule's streaming plan over any envelope-schema stream: the one-rule
+    * case of the service's plan. */
+  def buildStreaming(spec: AggregationSpec, windowSizeSec: Long, windowLagSec: Long)(
+      envelopes: DataFrame): DataFrame =
+    RuleCompiler.compileStreaming(Seq(spec), windowSizeSec, windowLagSec)(envelopes)
+
+  /** The service over any envelope stream: the whole config as one
+    * checkpointed append-mode query, written by `sink` (format and options). */
+  def start(specs: Seq[AggregationSpec], envelopes: DataFrame, windowSizeSec: Long,
+      windowLagSec: Long, checkpoint: String)(sink: DataFrame => DataStreamWriter[Row]): StreamingQuery =
+    sink(RuleCompiler.compileStreaming(specs, windowSizeSec, windowLagSec)(envelopes))
+      .option("checkpointLocation", checkpoint).outputMode("append")
+      .trigger(Trigger.ProcessingTime(s"$windowSizeSec seconds")).queryName(QueryName).start()
+
+  /** The Kafka→Kafka deployment, equivalent of the whole reference service:
+    * [[start]] between the Kafka source and sink. */
   def run(spark: SparkSession, specs: Seq[AggregationSpec], servers: String,
       inTopic: String, outTopic: String, windowSizeSec: Long, windowLagSec: Long,
       checkpointRoot: String): Seq[StreamingQuery] = {
-    val source = KafkaIO.readEnvelopes(spark, servers, inTopic)
-    specs.map { spec =>
-      KafkaIO.writeEnvelopes(
-          buildStreaming(spec, windowSizeSec, windowLagSec)(source),
-          servers, outTopic, s"$checkpointRoot/${spec.name}")
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(s"$windowSizeSec seconds"))
-        .queryName(spec.name)
-        .start()
-    }
+    val checkpoint = s"$checkpointRoot/$QueryName"
+    Seq(start(specs, KafkaIO.readEnvelopes(spark, servers, inTopic), windowSizeSec,
+      windowLagSec, checkpoint)(KafkaIO.writeEnvelopes(_, servers, outTopic, checkpoint)))
   }
 
   /** S4 — test-data generator with the reference publisher's shape

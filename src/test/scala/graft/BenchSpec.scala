@@ -31,6 +31,21 @@ class BenchSpec extends AnyFunSuite {
     assert(times.size >= 7)
   }
 
+  test("baseline readers parse exponent-notation times") {
+    val dir = java.nio.file.Files.createTempDirectory("benchspec-exp").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "BENCH_r01.json").toPath,
+      ("""{"tail": "\"a1_sum_1d\":8.5E-4,\"a2\":1.5e+2,\"a3\":2E1,""" +
+        """\"a4\":0.25,\"a5\":-3.0e-1,\"a6\":7\""}""").getBytes("UTF-8"))
+    val times = Bench.previousRoundTimes(dir.getAbsolutePath)
+    assert(times("a1_sum_1d") == 8.5e-4)
+    assert(times("a2") == 150.0 && times("a3") == 20.0 && times("a5") == -0.3)
+    val full = new java.io.File(dir, "BENCH_FULL_local.json")
+    java.nio.file.Files.write(full.toPath,
+      """{"queries":{"w1_count_1h":1.25E-3,"f5_multi_rule":2.5}}""".getBytes("UTF-8"))
+    assert(Bench.fullRecordTimes(full) ==
+      Map("w1_count_1h" -> 1.25e-3, "f5_multi_rule" -> 2.5))
+  }
+
   test("previousRoundTimes returns empty when no artifact has enough entries") {
     val dir = java.nio.file.Files.createTempDirectory("benchspec2").toFile
     java.nio.file.Files.write(new java.io.File(dir, "BENCH_r01.json").toPath,

@@ -568,6 +568,51 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val shippedSpecs = SpecLoader.loadValidated(
+    getClass.getResource("/aggregation-specifications.yaml").getPath)
+
+  private def occurrences(plan: String, s: String): Int =
+    java.util.regex.Pattern.quote(s).r.findAllIn(plan).length
+
+  test("a whole rule config plans one scan, one parse and one exchange per aggregate stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-json")
+    java.nio.file.Files.write(dir.resolve("part-0.jsonl"), java.util.List.of(
+      """{"metric":{"name":"metric0","timestamp":1.0,"value":1.0},"meta":{"tenantId":"t"}}"""))
+    // 25 rules in the five shipped shapes; one rollup re-windows
+    val config25 = (0 until 25).map { i =>
+      val s = shippedSpecs(i % 5).copy(name = s"Rule$i", filteredMetricName = s"metric$i")
+      if (i == 8) s.copy(rollup = Some(graft.model.RollupSpec("sum", Seq("service"), Some(300L))))
+      else s
+    }
+    Seq(shippedSpecs, config25).foreach { specs =>
+      val plan = executedPlan(RuleCompiler.compileAll(specs.map(_ -> 60L))(
+        graft.sources.EnvelopeJson.parse(spark.read.text(dir.toString))))
+      assert(occurrences(plan, "FileScan") == 1, s"${specs.size} rules: one scan expected:\n$plan")
+      assert(occurrences(plan, "from_json") == 1, s"${specs.size} rules: one parse expected:\n$plan")
+      // the window aggregate, then the rollup (an identity group for rules without one)
+      assert(occurrences(plan, "Exchange hashpartitioning") == 2,
+        s"${specs.size} rules: one exchange per aggregate stage expected:\n$plan")
+    }
+  }
+
+  test("the service runs the shipped config as one query with two stateful aggregates") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MetricEnvelope]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-plan-ckpt").toString
+    val q = graft.streaming.StreamRunner.start(shippedSpecs, input.toDF(), 1L, 1L, ckpt)(
+      _.writeStream.format("noop"))
+    try {
+      input.addData((0 to 4).map(i => MetricEnvelope(Metric(s"metric$i",
+        Map("hostname" -> "h", "service" -> "s", "cluster" -> "test-cluster-01"),
+        1000000000000.0, 1.0, Map.empty), Map("tenantId" -> "t"), 0L)))
+      q.processAllAvailable()
+      assert(spark.streams.active.count(_.name == graft.streaming.StreamRunner.QueryName) == 1)
+      assert(q.lastProgress.sources.length == 1)
+      assert(q.lastProgress.stateOperators.length == 2,
+        s"expected the window and rollup aggregates:\n${q.lastProgress.json}")
+    } finally q.stop()
+  }
+
   test("flagship entry() returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

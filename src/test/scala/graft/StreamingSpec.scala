@@ -1405,4 +1405,135 @@ class StreamingSpec extends AnyFunSuite {
           sum("hits").as("hits"), count(lit(1)).as("n_docs")))
     assert(s0 == o0, s"batch-0 audit diverges: $s0 vs $o0")
   }
+
+  // ---- the service: the shipped rule config as one query (StreamRunner.start)
+
+  private lazy val shipped = graft.spec.SpecLoader.loadValidated(
+    getClass.getResource("/aggregation-specifications.yaml").getPath)
+
+  /** An emitted envelope less its creation_time:
+    * (name, dimensions, timestamp, value, tenant). */
+  private type Emitted = (String, Map[String, String], Double, Double, String)
+
+  private def emitted(df: org.apache.spark.sql.DataFrame): Seq[Emitted] = {
+    import spark.implicits._
+    df.select($"metric.name", $"metric.dimensions", $"metric.timestamp", $"metric.value",
+      $"meta".getItem("tenantId")).as[Emitted].collect().toSeq.sortBy(_.toString)
+  }
+
+  /** Input for 1 s windows and a 1 s lag: batch `s` carries every shipped
+    * rule's metric for three hosts at three instants of second `s`, plus
+    * stragglers of second `s - 1` within the lag, so every rule's event time
+    * advances together. Two trailing batches, far ahead, close every earlier
+    * window whatever the micro-batch timing. */
+  private def serviceBatches(baseSec: Long, secs: Int): Seq[Seq[MetricEnvelope]] = {
+    val service = Map("test-01" -> "a", "test-02" -> "b", "inactive-host" -> "a")
+    def at(ms: Long, v: Double) = for (i <- 0 to 4; (h, svc) <- service.toSeq) yield
+      env(s"metric$i", Map("hostname" -> h, "service" -> svc, "cluster" -> "test-cluster-01"),
+        (baseSec * 1000 + ms).toDouble, v + i)
+    (0 until secs).map { s =>
+      Seq(0L, 300L, 600L).flatMap(o => at(s * 1000L + o, s + o / 100.0)) ++
+        (if (s > 0) at(s * 1000L - 200, -1.0) else Nil)
+    } ++ Seq(at(100000L, 0.0), at(100500L, 0.0))
+  }
+
+  /** Runs the service core over MemoryStream into a parquet file sink, one
+    * micro-batch per input batch; stops after batch `restartAfter` and
+    * restarts from the checkpoint. */
+  private def runService(batches: Seq[Seq[MetricEnvelope]], restartAfter: Int = -1): Seq[Emitted] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-svc-ckpt").toString
+    val out = java.nio.file.Files.createTempDirectory("graft-svc-out").toString
+    val input = MemoryStream[MetricEnvelope]
+    def start() = StreamRunner.start(shipped, input.toDF(), 1L, 1L, ckpt)(
+      _.writeStream.format("parquet").option("path", out))
+    var q = start()
+    try batches.zipWithIndex.foreach { case (b, i) =>
+      input.addData(b)
+      q.processAllAvailable()
+      if (i == restartAfter) { q.stop(); q = start() }
+    } finally q.stop()
+    emitted(spark.read.parquet(out))
+  }
+
+  /** One query per rule through `buildStreaming`, into memory sinks. */
+  private def runPerRule(specs: Seq[AggregationSpec],
+      batches: Seq[Seq[MetricEnvelope]]): Seq[Emitted] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    specs.flatMap { sp =>
+      val input = MemoryStream[MetricEnvelope]
+      val name = s"per_rule_${sp.name}"
+      val q = StreamRunner.buildStreaming(sp, 1L, 1L)(input.toDF())
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        emitted(spark.table(name))
+      } finally q.stop()
+    }.sortBy(_.toString)
+  }
+
+  test("service: the shipped config as one query emits the per-rule queries' rows", SlowTest) {
+    val batches = serviceBatches(7000000000L, 4)
+    val service = runService(batches)
+    assert(service.map(_._1).distinct.sorted == shipped.map(_.aggregatedMetricName).sorted)
+    assert(service == runPerRule(shipped, batches))
+  }
+
+  test("service: a rollup into coarser windows shares the query with the other rules", SlowTest) {
+    val rewindow = AggregationSpec(name = "ReWindow", function = "avg",
+      filteredMetricName = "metric3", groupedDimensions = Seq("hostname", "service"),
+      aggregatedMetricName = "aggregated-rewindow",
+      rollup = Some(RollupSpec("sum", Seq("service"), Some(2L))))
+    val specs = shipped :+ rewindow
+    val batches = serviceBatches(7050000000L, 5)
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[MetricEnvelope]
+    val q = graft.plan.RuleCompiler.compileStreaming(specs, 1L, 1L)(input.toDF())
+      .writeStream.format("memory").queryName("svc_rewindow").outputMode("append").start()
+    val service = try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      emitted(spark.table("svc_rewindow"))
+    } finally q.stop()
+    assert(service.exists(r => r._1 == "aggregated-rewindow" && r._3 % 2000 == 0))
+    assert(service == runPerRule(specs, batches))
+  }
+
+  test("service: a restart from the checkpoint emits what an uninterrupted run emits", SlowTest) {
+    val batches = serviceBatches(7100000000L, 4)
+    val uninterrupted = runService(batches)
+    assert(uninterrupted.map(_._1).distinct.size == shipped.size)
+    // one row per (rule output, dimensions, window, tenant): nothing duplicated
+    assert(uninterrupted.map(r => (r._1, r._2, r._3, r._5)).distinct.size == uninterrupted.size)
+    assert(runService(batches, restartAfter = 2) == uninterrupted)
+  }
+
+  test("service: one watermark for all rules drops a row behind another rule's events", SlowTest) {
+    val baseMs = 7200000000000L
+    def m(i: Int, ms: Long) = env(s"metric$i",
+      Map("hostname" -> "test-01", "service" -> "a", "cluster" -> "test-cluster-01"),
+      (baseMs + ms).toDouble, 1.0)
+    val batches = Seq(
+      Seq(m(0, 200), m(2, 200)),
+      Seq(m(0, 10200)), // metric0 moves the shared watermark to 9.2 s
+      Seq(m(2, 5200)),  // metric2's own events never passed 0.2 s
+      Seq(m(0, 100000), m(2, 100000)),
+      Seq(m(0, 100500), m(2, 100500)))
+    def windows(rows: Seq[Emitted]) =
+      rows.filter(_._1 == "aggregated-metric2").map(_._3 - baseMs).sorted
+    assert(windows(runService(batches)) == Seq(0.0))
+    // a query of its own keeps the row: its watermark follows metric2 alone
+    assert(windows(runPerRule(Seq(shipped(2)), batches)) == Seq(0.0, 5000.0))
+  }
+
+  test("the service session sizes shuffle partitions to its parallelism, not Spark's 200") {
+    val conf = new org.apache.spark.SparkConf(false)
+    val config = graft.spec.EngineConfig()
+    assert(Main.settings(config, conf, 4)(Main.ShufflePartitions) == "4")
+    // the deployment's own setting (spark-submit --conf) wins
+    assert(Main.settings(config, conf.clone.set(Main.ShufflePartitions, "16"), 4)(
+      Main.ShufflePartitions) == "16")
+  }
 }
