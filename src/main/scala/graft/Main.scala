@@ -2,7 +2,6 @@ package graft
 
 import graft.spec.{EngineConfig, SpecLoader}
 import graft.streaming.{Observability, StreamRunner}
-import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The deployable service — the equivalent of the reference's `main`
@@ -19,24 +18,25 @@ import org.apache.spark.sql.SparkSession
 object Main {
   val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  /** The service's session settings. The shuffle partition count, which is
-    * the number of state stores per stateful operator, is the session's
-    * parallelism unless the deployment's conf (spark-submit `--conf`) sets
-    * it. Spark restores it from an existing checkpoint's offset log, so it
-    * takes effect only on a fresh checkpoint. */
-  def settings(config: EngineConfig, conf: SparkConf, defaultParallelism: Int): Map[String, String] =
+  /** The service's session settings, all but the shuffle partition count,
+    * which [[sizeShuffle]] sets once the context exists. */
+  def settings(config: EngineConfig): Map[String, String] =
     Map("spark.sql.session.timeZone" -> "UTC",
       "spark.sql.extensions" -> "graft.sql.GraftExtensions",
-      "spark.sql.streaming.stateStore.providerClass" -> config.stateStoreProviderClass,
-      ShufflePartitions -> conf.get(ShufflePartitions, defaultParallelism.toString))
+      "spark.sql.streaming.stateStore.providerClass" -> config.stateStoreProviderClass)
 
-  def session(config: EngineConfig): SparkSession = {
-    // the parallelism is known once the context exists
-    val spark = SparkSession.builder().appName("monasca-aggregator-spark")
-      .config(settings(config, new SparkConf(), 1) - ShufflePartitions).getOrCreate()
+  def session(config: EngineConfig): SparkSession =
+    sizeShuffle(SparkSession.builder().appName("monasca-aggregator-spark")
+      .config(settings(config)).getOrCreate())
+
+  /** Sets the shuffle partition count, which is the number of state stores
+    * per stateful operator, to the session's parallelism unless the
+    * deployment's conf (spark-submit `--conf`) sets it. Spark restores the
+    * count from an existing checkpoint's offset log, so it takes effect only
+    * on a fresh checkpoint. */
+  def sizeShuffle(spark: SparkSession): SparkSession = {
     val sc = spark.sparkContext
-    spark.conf.set(ShufflePartitions,
-      settings(config, sc.getConf, sc.defaultParallelism)(ShufflePartitions))
+    spark.conf.set(ShufflePartitions, sc.getConf.get(ShufflePartitions, sc.defaultParallelism.toString))
     spark
   }
 

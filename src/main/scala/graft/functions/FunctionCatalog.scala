@@ -31,11 +31,9 @@ object FunctionCatalog {
 
   val names: Set[String] = referenceNames ++ extensionNames
 
-  /** Functions whose aggregation buffer is an object (a percentile's value
-    * list, an arrival-order UDAF's buffer) rather than primitive slots. A
-    * multi-rule plan aggregates them in a side aggregate, so the shared one
-    * stays a codegen'd HashAggregate. */
-  val objectBuffered: Set[String] = Set("p50", "p95", "p99", "delta_arrival", "rate_arrival")
+  /** Functions whose value depends on the order rows reach their aggregate
+    * in ([[ArrivalOrder]]). */
+  val arrivalOrder: Set[String] = Set("delta_arrival", "rate_arrival")
 
   /** Aggregate column for `function` over a measurement column and its
     * event-time column (epoch milliseconds, double). */

@@ -101,8 +101,8 @@ object RuleCompiler {
     * per parsed message (server.go:316-320), declaratively: 1. one scan and
     * parse, each envelope exploded into one row per rule it matches; 2. one
     * group-by (window, rule, tenant, grouped values) over one buffer of the
-    * slots the config's functions read ([[FunctionCatalog.slots]]), with
-    * object-buffered functions in a side aggregate keyed the same way;
+    * slots the config's functions read ([[FunctionCatalog.slots]]), and one
+    * for each rule with an arrival-order function;
     * 3. if any rule has a rollup, a second group-by for every rule (a rule
     * without one passes through a one-row identity group); 4. each rule's
     * projection, by a CASE on the rule name. So one exchange per aggregate
@@ -168,19 +168,26 @@ object RuleCompiler {
   }
 
   /** One group-by (window, rule, tenant, keys) computing each rule's function
-    * of (value, tsMs): shared slots in one aggregate, object-buffered
-    * functions in a side aggregate over the rows of the rules that use them. */
+    * of (value, tsMs) from one buffer. Slots are in name order, not config
+    * order: a streaming checkpoint's state rows are matched to the buffer by
+    * position, so reordering the rules must not reorder the buffer.
+    *
+    * An arrival-order function's value depends on the order its rows are
+    * merged in, which Spark keeps only while a partition's aggregate holds few
+    * groups (past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+    * it merges later rows before earlier ones). So each rule using one keeps
+    * an aggregate of its own, as a one-rule plan has, in rule-name order. */
   private def aggregateStage(df: DataFrame, window: Column, keys: Column,
       functions: Seq[(String, String)], value: Column, tsMs: Column): DataFrame = {
-    val (side, shared) = functions.partition(f => FunctionCatalog.objectBuffered(f._2))
+    val (own, shared) = functions.partition(f => FunctionCatalog.arrivalOrder(f._2))
     // a column, not a grouping expression: a watermark governs only a key
     // that is an attribute carrying the event-time metadata
     val keyed = df.withColumn("window_key", window)
-    Seq(shared, side).filter(_.nonEmpty).map { fns =>
+    (shared +: own.sortBy(_._1).map(Seq(_))).filter(_.nonEmpty).map { fns =>
       val in =
         if (fns.size == functions.size) keyed else keyed.filter(col(RuleCol).isin(fns.map(_._1): _*))
       val slots = fns.flatMap(f => FunctionCatalog.slots(f._2, value, tsMs)).distinctBy(_._1)
-        .map { case (n, c) => c.as(s"slot_$n") }
+        .sortBy(_._1).map { case (n, c) => c.as(s"slot_$n") }
       in.groupBy(col("window_key").as(WindowCol), col(RuleCol), col(TenantCol), keys.as(KeysCol))
         .agg(slots.head, slots.tail: _*)
         .select(col(WindowCol), col(RuleCol), col(TenantCol), col(KeysCol),

@@ -35,7 +35,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *    newest `offsets/` entry, as Kafka `startingOffsets`), or accept a replay
   *    from `earliest` that re-emits windows already emitted;
   *  - if a rule has a rollup, rules without one keep one-row identity groups
-  *    in the second aggregate's state.
+  *    in the second aggregate's state;
+  *  - the state layout belongs to the config, not to each rule. State is keyed
+  *    by rule name and the buffer's slots are in name order, so adding,
+  *    removing or reordering rules that use the functions already in the
+  *    config restarts from the checkpoint. A change to the set of functions
+  *    or rollup functions, the first or last rollup, or a rule with an
+  *    arrival-order function (which has an aggregate of its own) changes the
+  *    buffer or the stateful operators and needs a fresh checkpoint (upgrade
+  *    as above).
   */
 object StreamRunner {
 

@@ -178,4 +178,24 @@ class RuleCompilerSpec extends AnyFunSuite {
       .select($"metric.dimensions").as[Map[String, String]].head()
     assert(dims == Map("env" -> "prod", "hostname" -> "h", "service" -> "s"))
   }
+
+  test("a config of every function emits each rule's own rows") {
+    // one rule per function over the same rows, plus a percentile rollup: 168
+    // groups, past the object aggregate's sort fallback; one partition keeps
+    // the arrival-order functions' input order fixed
+    val rules = graft.functions.FunctionCatalog.names.toSeq.sorted.map(f =>
+      agg2.copy(name = s"rule-$f", function = f, aggregatedMetricName = s"agg-$f")) :+
+      agg2.copy(name = "rollup-p50", function = "delta", aggregatedMetricName = "agg-rollup",
+        rollup = Some(RollupSpec("p50", Seq("service"))))
+    val input = df((for (tick <- 0 until 10; s <- 0 until 3; h <- 0 until 2) yield
+      env("metric2", Map("service" -> s.toString, "hostname" -> h.toString),
+        (1000000000L + tick) * 1000.0, ((tick * 7 + s * 3 + h) % 5).toDouble)): _*).coalesce(1)
+    def rows(out: DataFrame) =
+      out.select($"metric.name", $"metric.dimensions", $"metric.timestamp", $"metric.value")
+        .as[(String, Map[String, String], Double, Double)].collect().toSeq
+    val all = rows(RuleCompiler.compileAll(rules.map(_ -> 5L))(input))
+    assert(all.map(_._1).toSet == rules.map(_.aggregatedMetricName).toSet)
+    assert(all.sortBy(_.toString) ==
+      rules.flatMap(r => rows(RuleCompiler.compile(r, 5L)(input))).sortBy(_.toString))
+  }
 }

@@ -1439,20 +1439,21 @@ class StreamingSpec extends AnyFunSuite {
 
   /** Runs the service core over MemoryStream into a parquet file sink, one
     * micro-batch per input batch; stops after batch `restartAfter` and
-    * restarts from the checkpoint. */
-  private def runService(batches: Seq[Seq[MetricEnvelope]], restartAfter: Int = -1): Seq[Emitted] = {
+    * restarts from the checkpoint with the rules `restartWith`. */
+  private def runService(batches: Seq[Seq[MetricEnvelope]], restartAfter: Int = -1,
+      restartWith: Seq[AggregationSpec] = shipped): Seq[Emitted] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("graft-svc-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft-svc-out").toString
     val input = MemoryStream[MetricEnvelope]
-    def start() = StreamRunner.start(shipped, input.toDF(), 1L, 1L, ckpt)(
+    def start(specs: Seq[AggregationSpec]) = StreamRunner.start(specs, input.toDF(), 1L, 1L, ckpt)(
       _.writeStream.format("parquet").option("path", out))
-    var q = start()
+    var q = start(shipped)
     try batches.zipWithIndex.foreach { case (b, i) =>
       input.addData(b)
       q.processAllAvailable()
-      if (i == restartAfter) { q.stop(); q = start() }
+      if (i == restartAfter) { q.stop(); q = start(restartWith) }
     } finally q.stop()
     emitted(spark.read.parquet(out))
   }
@@ -1510,6 +1511,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(runService(batches, restartAfter = 2) == uninterrupted)
   }
 
+  test("service: a restart with the rules reordered resumes the same state", SlowTest) {
+    // the rollup rule first: in config order its `sum` would take the rollup
+    // buffer's first slot and `avg` the window buffer's first
+    val reordered = shipped(3) +: shipped.filterNot(_ == shipped(3)).reverse
+    val batches = serviceBatches(7150000000L, 4)
+    assert(runService(batches, restartAfter = 2, restartWith = reordered) == runService(batches))
+  }
+
+  test("service: percentile and arrival-order rules share the query with the others", SlowTest) {
+    val specs = shipped ++ Seq(
+      AggregationSpec(name = "Arrival", function = "delta_arrival", filteredMetricName = "metric1",
+        groupedDimensions = Seq("hostname"), aggregatedMetricName = "aggregated-arrival"),
+      AggregationSpec(name = "P95", function = "p95", filteredMetricName = "metric2",
+        groupedDimensions = Seq("hostname"), aggregatedMetricName = "aggregated-p95"),
+      AggregationSpec(name = "RollupP50", function = "max", filteredMetricName = "metric4",
+        groupedDimensions = Seq("hostname", "service"), aggregatedMetricName = "aggregated-p50",
+        rollup = Some(RollupSpec("p50", Seq("service")))))
+    val batches = serviceBatches(7170000000L, 4)
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[MetricEnvelope]
+    val q = graft.plan.RuleCompiler.compileStreaming(specs, 1L, 1L)(input.toDF())
+      .writeStream.format("memory").queryName("svc_mixed").outputMode("append").start()
+    val service = try {
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      emitted(spark.table("svc_mixed"))
+    } finally q.stop()
+    assert(service.map(_._1).toSet == specs.map(_.aggregatedMetricName).toSet)
+    assert(service == runPerRule(specs, batches))
+  }
+
   test("service: one watermark for all rules drops a row behind another rule's events", SlowTest) {
     val baseMs = 7200000000000L
     def m(i: Int, ms: Long) = env(s"metric$i",
@@ -1528,12 +1560,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(windows(runPerRule(Seq(shipped(2)), batches)) == Seq(0.0, 5000.0))
   }
 
-  test("the service session sizes shuffle partitions to its parallelism, not Spark's 200") {
-    val conf = new org.apache.spark.SparkConf(false)
-    val config = graft.spec.EngineConfig()
-    assert(Main.settings(config, conf, 4)(Main.ShufflePartitions) == "4")
-    // the deployment's own setting (spark-submit --conf) wins
-    assert(Main.settings(config, conf.clone.set(Main.ShufflePartitions, "16"), 4)(
-      Main.ShufflePartitions) == "16")
+  test("the service session sizes shuffle partitions to its context, not Spark's 200") {
+    // a new session has SQL conf of its own: the shared session is untouched
+    val before = spark.conf.get(Main.ShufflePartitions)
+    val s = spark.newSession()
+    s.conf.set(Main.ShufflePartitions, "200")
+    val sc = spark.sparkContext
+    val sized = Main.sizeShuffle(s).conf.get(Main.ShufflePartitions)
+    assert(sized == sc.getConf.get(Main.ShufflePartitions, sc.defaultParallelism.toString))
+    assert(sized != "200")
+    assert(spark.conf.get(Main.ShufflePartitions) == before)
   }
 }
