@@ -23,6 +23,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * micro-batch reads and parses the source once into one window aggregate
   * (and a second when a rule has a rollup) — one incremental plan over one
   * versioned state store, as in *Structured Streaming* (SIGMOD 2018).
+  * Every micro-batch plans that query afresh, but the rules are literal
+  * tables in it and `creation_time` is the wall clock at emission, so the
+  * generated code is the same in every micro-batch and compiled once.
   * Against a query per rule:
   *  - one watermark for all rules (latest event time of any rule less the
   *    lag): a row more than windowLag behind another rule's events is late.

@@ -5,6 +5,8 @@ import graft.plan.RuleCompiler
 import graft.spec.SpecLoader
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Scale-regression guards on the PHYSICAL plans (these are the properties
   * that make the engine viable at 100 TB — a change that silently loses
   * pushdown or partial aggregation must fail here), plus the shipped
@@ -593,6 +595,83 @@ class PlanSpec extends AnyFunSuite {
       assert(occurrences(plan, "Exchange hashpartitioning") == 2,
         s"${specs.size} rules: one exchange per aggregate stage expected:\n$plan")
     }
+  }
+
+  /** `n` rules in the five shipped shapes (so the shipped functions), over
+    * metrics metric0, metric1, …, with distinct output names. */
+  private def shippedShapes(n: Int): Seq[AggregationSpec] = (0 until n).map { i =>
+    shippedSpecs(i % 5).copy(name = s"Rule$i", filteredMetricName = s"metric$i",
+      aggregatedMetricName = s"aggregated-metric$i")
+  }
+
+  /** A JSON-lines corpus with envelopes of metric0 … metric<n-1> that each
+    * shape matches, filters out or rejects, over two windows. */
+  private def shapesCorpus(n: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-rules")
+    val lines = for {
+      i <- 0 until n; host <- Seq("test-01", "test-02", "inactive-host")
+      (svc, t) <- Seq("a" -> 1000L, "b" -> 2000L, "a" -> 61000L)
+    } yield s"""{"metric":{"name":"metric$i","dimensions":{"hostname":"$host","service":"$svc",""" +
+      s""""cluster":"test-cluster-01"},"timestamp":${1700000000000L + t}.0,""" +
+      s""""value":${i + t / 1000}.0},""" +
+      """"meta":{"tenantId":"t"}}"""
+    java.nio.file.Files.write(dir.resolve("part-0.jsonl"), lines.asJava)
+    dir.toString
+  }
+
+  private def compiledAll(specs: Seq[AggregationSpec], dir: String) =
+    RuleCompiler.compileAll(specs.map(_ -> 60L))(
+      graft.sources.EnvelopeJson.parse(spark.read.text(dir)))
+
+  /** The largest method of each whole-stage-codegen subtree of an executed
+    * plan, as Janino compiles it (-1 where it fails to compile). */
+  private def largestMethods(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Int] =
+    org.apache.spark.sql.execution.debug.codegenStringSeq(plan).map(_._3.maxMethodCodeSize)
+
+  /** HotSpot does not JIT-compile a method over 8,000 bytecode bytes. */
+  private val HugeMethodLimit = 8000
+
+  test("a rule config's generated code is compiled once: a second pass hits the codegen cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = shapesCorpus(25)
+    def pass() = {
+      val df = graft.sources.EnvelopeJson.serialize(compiledAll(shippedShapes(25), dir))
+      (df.collect().length, df.queryExecution.executedPlan)
+    }
+    val (rows, plan) = pass()
+    // the counters are JVM-wide: compare before and after the second pass
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(pass()._1 == rows && rows > 0)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a second pass over the same config compiled new classes")
+    val methods = largestMethods(plan)
+    assert(methods.nonEmpty && methods.forall(m => m > 0 && m < HugeMethodLimit), s"$methods")
+  }
+
+  test("the plan of a rule config does not grow with its rules") {
+    val dir = shapesCorpus(1)
+    def expressionNodes(specs: Seq[AggregationSpec]) =
+      compiledAll(specs, dir).queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect { case e => e }.size).sum
+      }.sum
+    assert(expressionNodes(shippedShapes(5)) == expressionNodes(shippedShapes(100)))
+  }
+
+  test("200 rules compile under the JIT's method limit and emit the per-rule rows", SlowTest) {
+    val specs = shippedShapes(200)
+    val dir = shapesCorpus(200)
+    def envelopes(df: org.apache.spark.sql.DataFrame) =
+      df.select($"metric.name", $"metric.dimensions", $"metric.timestamp", $"metric.value",
+        $"meta".getItem("tenantId"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(_.toString)
+    val all = envelopes(compiledAll(specs, dir))
+    val emitted = rows(all)
+    // the executed plan of a collected query is the final adaptive plan
+    val methods = largestMethods(all.queryExecution.executedPlan)
+    assert(methods.nonEmpty && methods.forall(m => m > 0 && m < HugeMethodLimit), s"$methods")
+    val input = graft.sources.EnvelopeJson.parse(spark.read.text(dir))
+    assert(emitted.sortBy(_.toString) ==
+      specs.flatMap(s => rows(envelopes(RuleCompiler.compile(s, 60L)(input)))).sortBy(_.toString))
   }
 
   test("the service runs the shipped config as one query with two stateful aggregates") {

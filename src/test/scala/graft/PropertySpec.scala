@@ -6,7 +6,7 @@ import graft.operators.Sampling
 import graft.plan.RuleCompiler
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 /** ScalaCheck property tests (SURVEY.md §5.3): window-index alignment for
   * arbitrary timestamps and sizes, aggregate functions vs naive folds,
@@ -93,6 +93,53 @@ object PropertySpec extends Properties("graft") {
       viaRollup.keySet == direct.keySet && viaRollup.forall { case (k, v) =>
         math.abs(v - direct(k)) <= 1e-6 * math.max(1.0, math.abs(direct(k)))
       }
+    }
+
+  // rule match: the one-plan stage 1 (a match-table lookup on the metric
+  // name, one generic predicate over the rule's operands) against
+  // matchPredicate rule by rule. Three keys over two values make keys both
+  // filtered and grouped, absent grouped keys and "" rejects common; a third
+  // of the key sets are empty, so rules that only reject meet nil maps.
+  private val dimKeys = Seq("a", "b", "c")
+  private val genKeys: Gen[Seq[String]] =
+    Gen.frequency(1 -> Gen.const(Nil), 2 -> Gen.someOf(dimKeys).map(_.toSeq))
+  private def genDims(values: Gen[String]): Gen[Map[String, String]] =
+    genKeys.flatMap(ks => Gen.listOfN(ks.size, values).map(vs => ks.zip(vs).toMap))
+  private val genRule: Gen[AggregationSpec] = for {
+    metric <- Gen.oneOf("m0", "m1")
+    filtered <- genDims(Gen.oneOf("x", "y"))
+    rejected <- genDims(Gen.oneOf("x", "y", ""))
+    grouped <- genKeys
+    reversed <- Gen.oneOf(true, false)
+  } yield AggregationSpec(name = "", function = "count", filteredMetricName = metric,
+    filteredDimensions = filtered, rejectedDimensions = rejected,
+    groupedDimensions = if (reversed) grouped.reverse else grouped,
+    aggregatedMetricName = "out")
+  // nil dimensions, and JSON-null values
+  private val genEnvelope: Gen[(String, Map[String, String])] = Gen.zip(
+    Gen.oneOf("m0", "m1", "m2"),
+    Gen.frequency(1 -> Gen.const(null), 3 -> genDims(Gen.oneOf("x", "y", null))))
+
+  property("the table-driven match selects the (envelope, rule, grouped values) " +
+      "matchPredicate selects rule by rule ∀ rules/envelopes") =
+    // no shrinking: the shrinker cannot shrink a nil (null) dimension map
+    forAllNoShrink(Gen.nonEmptyListOf(genRule).map(_.take(6)),
+        Gen.listOf(genEnvelope).map(_.take(40))) {
+      (rules0, envs) =>
+        val rules = rules0.zipWithIndex.map { case (r, i) => r.copy(name = s"r$i") }
+        // the envelope's index rides in its value
+        val df = envs.zipWithIndex.map { case ((name, dims), i) =>
+          MetricEnvelope(Metric(name, dims, 0.0, i.toDouble, Map.empty), Map("tenantId" -> "t"), 0L)
+        }.toDF()
+        val tabled = RuleCompiler.matchRules(rules.map(_ -> 1L))(df)
+          .select($"value", $"rule", $"keys").as[(Double, String, Seq[String])].collect()
+        val reference = rules.map(r => df.filter(RuleCompiler.matchPredicate(r))
+            .select($"metric.value", lit(r.name), $"metric.dimensions"))
+          .reduce(_ union _).as[(Double, String, Map[String, String])].collect()
+          .map { case (v, name, dims) =>
+            (v, name, rules.find(_.name == name).get.groupedDimensions.map(dims(_)))
+          }
+        tabled.toSeq.sortBy(_.toString) == reference.toSeq.sortBy(_.toString)
     }
 
   property("sessionization equals the naive sorted islands fold") =

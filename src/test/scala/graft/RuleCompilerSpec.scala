@@ -179,6 +179,18 @@ class RuleCompilerSpec extends AnyFunSuite {
     assert(dims == Map("env" -> "prod", "hostname" -> "h", "service" -> "s"))
   }
 
+  test("creation_time is the wall clock when a row is emitted, not when the plan was built") {
+    val out = RuleCompiler.compileAll(Seq(agg2 -> 10L, agg2.copy(name = "Count",
+      function = "count", aggregatedMetricName = "count-metric2") -> 10L))(df(publisherGrid(): _*))
+    out.queryExecution.executedPlan
+    Thread.sleep(20)
+    val from = System.currentTimeMillis()
+    val stamps = out.collect().map(_.getAs[Long]("creation_time"))
+    val to = System.currentTimeMillis()
+    assert(stamps.length == 12)
+    assert(stamps.forall(t => from <= t && t <= to), s"${stamps.toSeq} outside [$from, $to]")
+  }
+
   test("a config of every function emits each rule's own rows") {
     // one rule per function over the same rows, plus a percentile rollup: 168
     // groups, past the object aggregate's sort fallback; one partition keeps

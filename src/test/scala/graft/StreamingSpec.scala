@@ -6,6 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Streaming end-to-end through MemoryStream: append-mode emission on
   * watermark advance, late-data drop, and the chained-stateful rollup —
   * the streaming analog of the reference's publisher scenario
@@ -1441,10 +1443,10 @@ class StreamingSpec extends AnyFunSuite {
     * micro-batch per input batch; stops after batch `restartAfter` and
     * restarts from the checkpoint with the rules `restartWith`. */
   private def runService(batches: Seq[Seq[MetricEnvelope]], restartAfter: Int = -1,
-      restartWith: Seq[AggregationSpec] = shipped): Seq[Emitted] = {
+      restartWith: Seq[AggregationSpec] = shipped,
+      ckpt: String = java.nio.file.Files.createTempDirectory("graft-svc-ckpt").toString): Seq[Emitted] = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-svc-ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft-svc-out").toString
     val input = MemoryStream[MetricEnvelope]
     def start(specs: Seq[AggregationSpec]) = StreamRunner.start(specs, input.toDF(), 1L, 1L, ckpt)(
@@ -1517,6 +1519,54 @@ class StreamingSpec extends AnyFunSuite {
     val reordered = shipped(3) +: shipped.filterNot(_ == shipped(3)).reverse
     val batches = serviceBatches(7150000000L, 4)
     assert(runService(batches, restartAfter = 2, restartWith = reordered) == runService(batches))
+  }
+
+  test("service: the shipped config keeps the state layout its checkpoints hold", SlowTest) {
+    // key and value schemas of the rollup (0) and window (1) aggregates, as
+    // the `statestore` reader reads them back from a checkpoint: a change
+    // here makes a restart from an existing checkpoint fail or misread state
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-svc-layout").toString
+    runService(serviceBatches(7160000000L, 2), ckpt = ckpt)
+    def layout(op: Int) = {
+      val s = spark.read.format("statestore").option("operatorId", op.toLong).load(ckpt).schema
+      Seq("key", "value").map(f => s(f).dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
+    }
+    def field(name: String, tpe: String, nullable: Boolean, meta: String = "{}") =
+      s"""{"name":"$name","type":$tpe,"nullable":$nullable,"metadata":$meta}"""
+    def struct(fields: String*) = s"""{"type":"struct","fields":[${fields.mkString(",")}]}"""
+    val window = field("window_key", struct(field("start", "\"timestamp\"", true),
+      field("end", "\"timestamp\"", true)), false, """{"spark.watermarkDelayMs":1000}""")
+    def key(keys: String) = struct(window, field("rule", "\"string\"", true),
+      field("tenant_id", "\"string\"", false),
+      field(keys, """{"type":"array","elementType":"string","containsNull":true}""", false))
+    def double(n: String) = field(n, "\"double\"", true)
+    // the layout existing checkpoints of the shipped config hold
+    assert(layout(0).map(_.json) == Seq(key("_groupingexpression"),
+      struct(double("max"), double("sum"))))
+    assert(layout(1).map(_.json) == Seq(key("keys"), struct(double("sum"),
+      field("count", "\"long\"", true), field("count", "\"long\"", false), double("sum"))))
+  }
+
+  test("service: creation_time is the wall clock of the micro-batch that emits the row", SlowTest) {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-svc-clock").toString
+    val input = MemoryStream[MetricEnvelope]
+    // each micro-batch's stamps and the wall-clock interval it was emitted in
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Seq[Long])]
+    val emit: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, _) => {
+      val from = System.currentTimeMillis()
+      val stamps = df.collect().toSeq.map(_.getAs[Long]("creation_time"))
+      batches.add((from, System.currentTimeMillis(), stamps))
+    }
+    val q = StreamRunner.start(shipped, input.toDF(), 1L, 1L, ckpt)(_.writeStream.foreachBatch(emit))
+    try serviceBatches(7180000000L, 3).foreach { b => input.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    val all = batches.asScala.toSeq
+    assert(all.exists(_._3.nonEmpty))
+    all.foreach { case (from, to, stamps) =>
+      assert(stamps.forall(t => from <= t && t <= to), s"$stamps outside [$from, $to]")
+    }
   }
 
   test("service: percentile and arrival-order rules share the query with the others", SlowTest) {
