@@ -1,6 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints TWO JSON lines:
@@ -23,10 +25,9 @@ import org.apache.spark.sql.SparkSession
   * at the target scale factor writing to the noop sink, which forces full
   * column materialization (a bare count() would let Catalyst prune most of
   * the work). Contention-awareness: the 1-minute system loadavg is recorded
-  * before and after the sweep, and any query slower than 3× its time in the
-  * newest BENCH_r*.json (harvested from the truncated tails too) gets ONE
-  * extra timed run (min taken) so a transient noisy-neighbor spike doesn't
-  * masquerade as a regression.
+  * before and after the sweep, and any query slower than 3× its recorded
+  * time ([[previousRoundTimes]]) gets ONE extra timed run (min taken) so a
+  * transient noisy-neighbor spike doesn't masquerade as a regression.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -45,14 +46,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1320").toDouble
     def overBudget: Boolean = budgetSec > 0 && elapsedSec > budgetSec
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def exec(name: String, dir: String): Unit =
       try SparkEntry.queries(name)(spark, dir)
@@ -186,8 +180,8 @@ object Bench {
     val sweptNames = raw.map(_._1)
     val calibMedian = medianOf(probes.toSeq)
     val factors0 = calibFactors(probes.toIndexedSeq)
-    val flagged0 = sweptNames.indices
-      .filter(i => factors0(i) > calibFlagThreshold).map(sweptNames)
+    val flagged0 =
+      flaggedQueries(sweptNames, probes.toIndexedSeq, calibFlagThreshold)
     // rerun every flagged query once, bracketed by fresh probes: if the
     // fresh window is clean the new (min) time replaces the suspect one
     // and the flag clears; a window still hot keeps the flag — the record
@@ -228,7 +222,8 @@ object Bench {
     // remainder above the compact line even when the line's head is cut
     val calibJson = sweptNames.map(n =>
       "\"" + n + "\":" + f"${factors(n)}%.2f").mkString("{", ",", "}")
-    val calibFields =
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"""
+    val fields =
       s""""calibration":$calibJson,""" +
       f""""calib_median_sec":$calibMedian%.4f,""" +
       s""""calib_flag_threshold":$calibFlagThreshold,""" +
@@ -238,12 +233,7 @@ object Bench {
       s""""partial":$partial,""" +
       s""""unswept":${unswept.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""budget_sec":$budgetSec,""" +
-      f""""elapsed_sec":$elapsedSec%.1f,"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      """"query_repeat_policy":"single timed run when the previous-round record is <1s and the run lands within 3x of it, else min-of-2, after a sf0.001 warmup pass; one extra run when still >3x the previous round's time; whole sweep under a wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC) with graceful partial emission",""" +
-      """"throughput_policy":"median-of-5 after a discarded warmup run (min recorded); while the counted min is >3x below the counted median the slowest counted run is replaced by a fresh one (max 3); runs list is execution order incl. warmup and replacements",""" +
-      """"calibration_policy":"fixed 20M-iteration single-thread xor-mul-rotate probe timed before/after every query; factor = max(bracketing probes)/sweep median; factor > threshold flags the query for ONE bracketed rerun (min taken when the fresh window is clean); 3+ surviving flags stamp the record throttled",""" +
-      calibFields +
+      f""""elapsed_sec":$elapsedSec%.1f,""" +
       s""""rerun_queries":${rerun.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""throughput_eps_runs":${epsRuns.mkString("[", ",", "]")},""" +
       s""""throughput_replaced_runs":$epsReplaced,""" +
@@ -251,20 +241,16 @@ object Bench {
       s""""loadavg_gate":$loadGate,"loadavg_wait_sec":$gateWaitSec,""" +
       s""""contended":$contended,""" +
       s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir",""" +
-      s""""throughput_eps_min":${epsMin.round},"throughput_eps":${eps.round}}""")
+      s""""throughput_eps_min":${epsMin.round},"throughput_eps":${eps.round}}"""
+    // the log line alone carries the policy strings
+    println(head +
+      """"query_repeat_policy":"single timed run when the previous-round record is <1s and the run lands within 3x of it, else min-of-2, after a sf0.001 warmup pass; one extra run when still >3x the previous round's time; whole sweep under a wall-clock budget (SPARK_GRAFT_BENCH_BUDGET_SEC) with graceful partial emission",""" +
+      """"throughput_policy":"median-of-5 after a discarded warmup run (min recorded); while the counted min is >3x below the counted median the slowest counted run is replaced by a fresh one (max 3); runs list is execution order incl. warmup and replacements",""" +
+      """"calibration_policy":"fixed 20M-iteration single-thread xor-mul-rotate probe timed before/after every query; factor = max(bracketing probes)/sweep median; factor > threshold flags the query for ONE bracketed rerun (min taken when the fresh window is clean); 3+ surviving flags stamp the record throttled",""" +
+      fields)
     // insurance against ANY stdout truncation: the full verbose record also
     // lands in a file the driver's end-of-round commit will pick up
-    try writeFullRecordAtomic("BENCH_FULL_local.json",
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        calibFields +
-        s""""rerun_queries":${rerun.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""throughput_eps_runs":${epsRuns.mkString("[", ",", "]")},""" +
-        s""""throughput_replaced_runs":$epsReplaced,""" +
-        s""""throughput_eps_min_raw":${epsMinRaw.round},""" +
-        s""""loadavg_gate":$loadGate,"loadavg_wait_sec":$gateWaitSec,""" +
-        s""""contended":$contended,""" +
-        s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,"sf":"$sfDir",""" +
-        s""""throughput_eps_min":${epsMin.round},"throughput_eps":${eps.round}}""")
+    try writeFullRecordAtomic("BENCH_FULL_local.json", head + fields)
     catch { case e: Throwable =>
       System.err.println(s"[bench] full-record file write failed: ${e.getMessage}") }
     // line 2, LAST: the compact line of record in the DRIVER'S DOCUMENTED
@@ -416,10 +402,6 @@ object Bench {
     }
   }
 
-  /** Integer milliseconds for the compact line (-1 failure marker kept). */
-  private[graft] def ms(v: Double): String =
-    if (v < 0) "-1" else math.round(v * 1000).toString
-
   /** The final-line `queries` map: FLAT name → seconds (driver-spec shape),
     * keeping only the `topN` slowest plus EVERY failure individually and
     * folding the remainder into one `"_other+<count>"` summed entry — the
@@ -437,40 +419,6 @@ object Bench {
       (if (rest.isEmpty) Nil
        else Seq("\"_other+" + rest.size + "\":" + sig3(rest.map(_._2).sum)))
     entries.mkString("{", ",", "}")
-  }
-
-  /** The compact per-query map, PREFIX-GROUPED and TOP-N-CAPPED: query
-    * families sharing the segment before the first '_' with ≥3 members fold
-    * into one nested object — `"text":{"stats":210,…}` reads back as
-    * `text_stats` = 0.210 s; families smaller than 3 stay flat.
-    *
-    * Only the `topN` SLOWEST queries (plus EVERY failure, which must never
-    * hide inside a sum) keep an individual timing; a family's remaining
-    * members fold into one `"+<count>":<summed ms>` entry (flat families:
-    * `"<fam>+<count>"`). The registry passed 99 queries in round 10 and the
-    * all-individual line overflowed the ~2000-char tail capture's modeled
-    * worst case — capping makes the line's size O(topN + families), immune
-    * to registry growth. The FLAT full-precision seconds map is always on
-    * the verbose line and in BENCH_FULL_local.json. */
-  private[graft] def compactQueries(results: Seq[(String, Double)],
-      topN: Int = Int.MaxValue): String = {
-    val keep: Set[String] =
-      results.collect { case (k, v) if v < 0 => k }.toSet ++
-        results.filter(_._2 >= 0).sortBy(-_._2).take(topN).map(_._1)
-    def restEntry(rest: Seq[(String, Double)], key: String): Seq[String] =
-      if (rest.isEmpty) Nil
-      else Seq("\"" + key + "+" + rest.size + "\":" + ms(rest.map(_._2).sum))
-    results.groupBy { case (k, _) => k.takeWhile(_ != '_') }
-      .toSeq.sortBy(_._1)
-      .map { case (fam, members) =>
-        val (kept, rest) = members.partition(m => keep(m._1))
-        if (members.size >= 3 && members.forall(_._1.startsWith(fam + "_")))
-          "\"" + fam + "\":" + (kept.sortBy(_._1).map { case (k, v) =>
-            "\"" + k.drop(fam.length + 1) + "\":" + ms(v) } ++
-            restEntry(rest, "")).mkString("{", ",", "}")
-        else (kept.sortBy(_._1).map { case (k, v) =>
-          "\"" + k + "\":" + ms(v) } ++ restEntry(rest, fam)).mkString(",")
-      }.mkString("{", ",", "}")
   }
 
   /** Adaptive-precision seconds, at most 4 chars below 1000 s: the compact
@@ -492,69 +440,45 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
-  /** A JSON number as the bench artifacts write it, exponent included
-    * (`8.5E-4` is 0.00085 s, not 8.5 s). */
-  private val Number = "-?[0-9][0-9.]*(?:[eE][-+]?[0-9]+)?"
-
-  /** Per-query seconds from the newest BENCH_r*.json that yields any — the
-    * 3× rerun baseline. Self-contained regex extraction (no JSON library on
-    * the runtime classpath) over the WHOLE file: every prior artifact stored
-    * only a truncated `tail` of stdout, so there is no intact `"queries"`
-    * object to parse — harvest all `"name":number` pairs instead and let the
-    * caller look up actual query names only (driver wrapper keys like `rc`/
-    * `cpus`/`sf` never collide with a query name). A truncated round simply
-    * contributes fewer entries — a missing baseline only disables the rerun
-    * heuristic for that query, never fails the bench. */
-  private[graft] def previousRoundTimes(benchDir: String = "/root/repo"): Map[String, Double] = {
+  /** Per-query seconds the committed records hold, for the sweep order, the
+    * single-run fast path and the 3× rerun here and for Verify's
+    * cheapest-first order: the `queries` object of BENCH_FULL_local.json
+    * (every query, full precision), overlaid by the `parsed.queries` of the
+    * newest BENCH_r*.json with more than 5 entries (the driver's compact line:
+    * the 40 slowest plus one `_other+K` sum, a key no query has). Only those
+    * two objects are read: a record's `calibration` map and a driver
+    * artifact's `tail` hold numbers that are not query times. A missing or
+    * unreadable file contributes nothing — a missing baseline only disables
+    * the run-count policy for that query, never fails the caller. */
+  private[graft] def previousRoundTimes(benchDir: String = "."): Map[String, Double] = {
+    val mapper = new ObjectMapper
+    def times(f: java.io.File, path: String*): Map[String, Double] =
+      try path.foldLeft(mapper.readTree(f))(_.path(_)).properties.asScala
+        .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+        .toMap
+      catch { case _: java.io.IOException => Map.empty }
     val dir = new java.io.File(benchDir)
-    val rounds = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(_.getName).reverse
-    val entry = java.util.regex.Pattern.compile(
-      "\\\\?\"([A-Za-z0-9_]+)\\\\?\":(" + Number + ")")
-    val fromRounds = rounds.iterator.map { f =>
-      try {
-        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val m = entry.matcher(text)
-        val out = Map.newBuilder[String, Double]
-        while (m.find()) out += m.group(1) -> m.group(2).toDouble
-        out.result()
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    }.find(_.size > 5).getOrElse(Map.empty)
-    // the committed full-precision record covers EVERY query, where the
-    // compact driver artifact keeps only the top-40 slowest — without the
-    // fallback ~250 queries had no baseline, so the sub-second single-run
-    // fast path never fired for them and the driver's 32-core sweep paid
-    // min-of-2 across the whole registry and blew its wall-clock budget
-    // (r17: 89 queries unswept). Newest-driver-artifact values win where
-    // both exist; the fallback only FILLS gaps. Run-count policy only —
-    // every timed run still computes from the parquet inputs.
-    fullRecordTimes(new java.io.File(dir, "BENCH_FULL_local.json")) ++ fromRounds
+    val newestRound = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
+      .sortBy(_.getName).reverseIterator
+      .map(times(_, "parsed", "queries"))
+      .find(_.size > 5).getOrElse(Map.empty)
+    times(new java.io.File(dir, "BENCH_FULL_local.json"), "queries") ++ newestRound
   }
 
-  /** Per-query seconds from a full-record file: extraction is scoped to the
-    * flat `"queries":{...}` object (regex over the whole file would also
-    * harvest the `"calibration":{name:factor}` map and poison the baseline
-    * with ≈1.0 pseudo-times). Missing/truncated file → empty map. */
-  private[graft] def fullRecordTimes(f: java.io.File): Map[String, Double] =
-    try {
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val start = text.indexOf("\"queries\":{")
-      if (start < 0) Map.empty
-      else {
-        val open = start + "\"queries\":".length
-        val close = text.indexOf('}', open) // flat object: first '}' ends it
-        if (close < 0) Map.empty
-        else {
-          val entry = java.util.regex.Pattern.compile(
-            "\"([A-Za-z0-9_]+)\":(" + Number + ")")
-          val m = entry.matcher(text.substring(open, close))
-          val out = Map.newBuilder[String, Double]
-          while (m.find()) out += m.group(1) -> m.group(2).toDouble
-          out.result()
-        }
-      }
-    } catch { case _: Throwable => Map.empty }
+  /** The local session every registry main runs on: `local[cpus]`, `cpus`
+    * shuffle partitions, UTC, no UI. Any other Spark key reaches it as a
+    * `spark.*` system property (`sbt 'set javaOptions += "-Dspark.…"'`). */
+  private[graft] def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Ingest-throughput probe against the reference's one published number
     * (">50K metrics/sec", README.md:62-63): JSON envelopes/sec through the

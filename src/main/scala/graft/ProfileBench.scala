@@ -1,46 +1,48 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftBridge
 
 /** Per-query execution profiler (optimization-guide §1 "measure first"):
   * runs selected SparkEntry queries with a SparkListener attached and
-  * reports, per query, the JOB count, STAGE count, TASK count, summed
-  * executor task time, summed GC time, shuffle bytes read/written, and the
-  * wall time — the numbers that tell scheduling overhead (many near-empty
-  * tasks / BSP job latency) apart from genuine compute, which the bench's
-  * single wall-clock number cannot.
+  * reports, per run, the wall time, the JOB, STAGE and TASK counts, summed
+  * executor task time, summed GC time and shuffle bytes read/written,
+  * followed by one line per stage (the 12 with the most task time: tasks,
+  * wall, task time, call site) — the numbers that tell scheduling overhead
+  * (many near-empty tasks / BSP job latency) apart from genuine compute,
+  * which the bench's single wall-clock number cannot.
   *
-  * Usage: `sbt "runMain graft.ProfileBench q1 q2 ..."` — same env contract
-  * as Bench (`SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`); each query gets one
-  * sf0.001 warmup, then `SPARK_GRAFT_PROFILE_RUNS` (default 2) timed runs at
-  * the target SF with per-run metrics (noop sink, cache cleared between
-  * runs, the Bench discipline). Diagnostics only — never an artifact the
-  * driver reads. */
+  * Usage: `sbt "runMain graft.ProfileBench q1 q2 ..."` (every query when none
+  * is named) — same env contract as Bench (`SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_CPUS`); any other Spark key goes in as a system property:
+  * `sbt 'set javaOptions += "-Dspark.sql.adaptive.enabled=false"' "runMain …"`.
+  * Each query gets one sf0.001 warmup, then two timed runs at the target SF
+  * (Bench's min-of-2: noop sink, cache cleared between runs). Diagnostics
+  * only — never an artifact the driver reads. */
 object ProfileBench {
+  private val Runs = 2
+  private val StageLines = 12
+
   private class Acc extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskTimeMs = 0L
-    @volatile var gcMs = 0L
-    @volatile var shufReadB = 0L
-    @volatile var shufWriteB = 0L
-    val jobLog = new scala.collection.mutable.ListBuffer[(Int, Long, String)]
-    private val jobStartMs = new scala.collection.mutable.HashMap[Int, (Long, String)]
+    private var jobs = 0
+    private var tasks = 0
+    private var taskTimeMs = 0L
+    private var gcMs = 0L
+    private var shufReadB = 0L
+    private var shufWriteB = 0L
+    // (stage id, tasks, wall ms, task ms, call site)
+    private val stageLog =
+      new scala.collection.mutable.ListBuffer[(Int, Int, Long, Long, String)]
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobs += 1
-      jobStartMs(j.jobId) = (j.time,
-        Option(j.properties).map(_.getProperty("spark.job.description", ""))
-          .getOrElse(""))
-    }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-      jobStartMs.remove(j.jobId).foreach { case (t0, desc) =>
-        jobLog += ((j.jobId, j.time - t0, desc))
-      }
     }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = synchronized {
-      stages += 1
+      val i = s.stageInfo
+      val wallMs = (for (b <- i.submissionTime; e <- i.completionTime)
+        yield e - b).getOrElse(0L)
+      stageLog += ((i.stageId, i.numTasks, wallMs,
+        Option(i.taskMetrics).fold(0L)(_.executorRunTime),
+        i.name.takeWhile(_ != '\n')))
     }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
       tasks += 1
@@ -53,29 +55,28 @@ object ProfileBench {
       }
     }
     def reset(): Unit = synchronized {
-      jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0; gcMs = 0
-      shufReadB = 0; shufWriteB = 0; jobLog.clear(); jobStartMs.clear()
+      jobs = 0; tasks = 0; taskTimeMs = 0; gcMs = 0
+      shufReadB = 0; shufWriteB = 0; stageLog.clear()
+    }
+    /** The run's row, then its stage lines. */
+    def report(name: String, run: Int, wallS: Double): Seq[String] = synchronized {
+      val row = f"$name%-28s $run%3d $wallS%7.2f $jobs%5d ${stageLog.size}%6d " +
+        f"$tasks%5d ${taskTimeMs / 1e3}%7.1f ${gcMs / 1e3}%5.1f " +
+        f"${shufReadB / 1e6}%9.1f ${shufWriteB / 1e6}%8.1f"
+      row +: stageLog.sortBy(-_._4).take(StageLines).toSeq.map {
+        case (id, nt, wallMs, taskMs, site) =>
+          f"    stage $id%4d tasks $nt%5d wall_s ${wallMs / 1e3}%6.2f " +
+            f"taskT_s ${taskMs / 1e3}%6.2f  $site"
+      }
     }
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // ad-hoc A/B lever: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val sc = spark.sparkContext
     val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
+    sc.addSparkListener(acc)
 
     def exec(name: String, dir: String): Unit =
       try SparkEntry.queries(name)(spark, dir)
@@ -87,24 +88,18 @@ object ProfileBench {
     println(f"${"query"}%-28s run  wall_s  jobs stages tasks taskT_s  gc_s  shufR_MB shufW_MB")
     names.foreach { n =>
       try {
-        spark.sparkContext.setJobDescription(s"warmup $n")
         exec(n, "/root/testdata/sf0.001")
-        (1 to runs).foreach { i =>
-          // listener bus is async; give stragglers a beat before reset/read
-          Thread.sleep(400)
+        (1 to Runs).foreach { i =>
+          // the listener bus is asynchronous: drain it so the warmup's or the
+          // previous run's events land before the reset, and this run's
+          // before the report
+          GraftBridge.drainListenerBus(sc)
           acc.reset()
-          spark.sparkContext.setJobDescription(s"timed $n")
           val t0 = System.nanoTime()
           exec(n, sfDir)
           val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(400)
-          println(f"$n%-28s $i%3d $wall%7.2f ${acc.jobs}%5d ${acc.stages}%6d " +
-            f"${acc.tasks}%5d ${acc.taskTimeMs / 1e3}%7.1f ${acc.gcMs / 1e3}%5.1f " +
-            f"${acc.shufReadB / 1e6}%9.1f ${acc.shufWriteB / 1e6}%8.1f")
-          if (i == runs && sys.env.contains("SPARK_GRAFT_PROFILE_JOBS"))
-            acc.jobLog.toList.foreach { case (id, ms, desc) =>
-              println(f"    job $id%4d ${ms}%6d ms  ${desc.take(90)}")
-            }
+          GraftBridge.drainListenerBus(sc)
+          acc.report(n, i, wall).foreach(println)
         }
       } catch { case e: Throwable =>
         println(s"$n FAILED: ${e.getMessage}")

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -8,8 +9,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * the driver's run died mid-loop and, because oracle_sql.json was written
   * LAST, the whole round's correctness signal was zeroed):
   *   1. oracle_sql.json is written FIRST, before any query runs;
-  *   2. queries run CHEAPEST-FIRST (ordered by the committed
-  *      BENCH_FULL_local.json timings; unknown queries at the known median),
+  *   2. queries run CHEAPEST-FIRST (ordered by the committed bench records,
+  *      [[Bench.previousRoundTimes]]; unknown queries at the known median),
   *      so an interrupted run still yields the most green rows possible;
   *   3. each completed query appends to `_graft_progress.txt` and logs
   *      `[verify] k/N name ok|failed` — partial runs are auditable.
@@ -17,32 +18,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
 
     // ---- 1. oracle_sql.json FIRST ----
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir)
 
     // ---- 2. cheapest-first ordering from the committed full bench record ----
     val names = {
@@ -52,7 +32,7 @@ object Verify {
       SparkEntry.queries.keys.toSeq
         .filter(n => only.forall(_.contains(n)) && tier(n)).sorted
     }
-    val known = fullBenchTimes()
+    val known = Bench.previousRoundTimes()
     val defaultCost =
       if (known.isEmpty) 0.0
       else known.values.toSeq.sorted.apply(known.size / 2)
@@ -80,24 +60,8 @@ object Verify {
     spark.stop()
   }
 
-  /** Per-query seconds from the committed BENCH_FULL_local.json (the
-    * full-precision record every round commits), falling back to the newest
-    * BENCH_r*.json tails — the cheapest-first ordering source. Missing or
-    * unparsable files just disable the ordering (alphabetical fallback),
-    * never fail the dump. */
-  private[graft] def fullBenchTimes(dir: String = "/root/repo"): Map[String, Double] = {
-    val full = new java.io.File(dir, "BENCH_FULL_local.json")
-    val entry = java.util.regex.Pattern.compile(
-      "\"([A-Za-z0-9_]+)\":(-?[0-9][0-9.]*)")
-    val fromFull: Map[String, Double] =
-      if (!full.isFile) Map.empty
-      else try {
-        val text = new String(Files.readAllBytes(full.toPath), "UTF-8")
-        val m = entry.matcher(text)
-        val out = Map.newBuilder[String, Double]
-        while (m.find()) out += m.group(1) -> m.group(2).toDouble
-        out.result()
-      } catch { case _: Throwable => Map.empty }
-    if (fromFull.size > 5) fromFull else Bench.previousRoundTimes(dir)
-  }
+  /** `<outDir>/oracle_sql.json`: every query name → its DuckDB oracle SQL. */
+  private[graft] def writeOracleSql(outDir: String): Unit =
+    new ObjectMapper().writeValue(new java.io.File(outDir, "oracle_sql.json"),
+      SparkEntry.oracleSql.asJava)
 }

@@ -13,10 +13,14 @@ import org.apache.spark.sql.functions.udaf
   * deterministic event-time order instead; this Aggregator exists for golden
   * comparison against reference output streams.
   *
-  * "Arrival order" here is row order within the aggregation: exact on a
-  * single partition (as in the single-threaded reference); across partitions
-  * the merge order follows partition order, which is as (un)defined as the
-  * reference's behavior under any reordering.
+  * "Arrival order" here is row order within the aggregation, and it holds
+  * only up to `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
+  * (128) groups per partition, even on a single partition: past it Spark's
+  * object aggregate falls back to sorting and merges a group's later rows
+  * before its earlier buffer, so first/last read the wrong rows. Within that
+  * limit a single partition is exact (as in the single-threaded reference);
+  * across partitions the merge order follows partition order, which is as
+  * (un)defined as the reference's behavior under any reordering.
   */
 object ArrivalOrder {
 

@@ -237,7 +237,9 @@ object RuleCompiler {
     * merged in, which Spark keeps only while a partition's aggregate holds few
     * groups (past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold`
     * it merges later rows before earlier ones). So each rule using one keeps
-    * an aggregate of its own, as a one-rule plan has, in rule-name order. */
+    * an aggregate of its own, as a one-rule plan has, in rule-name order:
+    * other rules' groups do not count against the threshold, but the rule's
+    * order still holds only up to 128 groups of its own per partition. */
   private def aggregateStage(df: DataFrame, window: Column, keys: Column,
       functions: Seq[(String, String)], value: Column, tsMs: Column): DataFrame = {
     val (own, shared) = functions.partition(f => FunctionCatalog.arrivalOrder(f._2))

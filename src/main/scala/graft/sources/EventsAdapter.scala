@@ -38,19 +38,10 @@ object EventsAdapter {
   /** The raw events table with `ts` already normalized to epoch-micros
     * (`ts_us` BIGINT) — the input surface for the relational extension
     * queries (as-of / range joins), sharing envelopes()' reader conf and
-    * timestamp semantics so every consumer agrees on the instant.
-    *
-    * `floorScan` as in [[envelopes]]: opt-in for consumers whose first pass
-    * over the table is heavy narrow work (the graph family's
-    * `get_json_object` projection + transition window ran on ONE core of a
-    * single-split scan — r18 profiling clocked graph_pagerank's
-    * construction jobs at ~2.5 s of its 4.3 s wall). */
-  def rawEvents(spark: SparkSession, sfDir: String,
-      floorScan: Boolean = false): DataFrame = {
+    * timestamp semantics so every consumer agrees on the instant. */
+  def rawEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/events.parquet"
-    val events = if (floorScan) ScanParallelism.flooredParquet(spark, path)
-      else spark.read.parquet(path)
+    val events = spark.read.parquet(s"$sfDir/events.parquet")
     events.withColumn("ts_us", tsMicros(events)).drop("ts")
   }
 

@@ -2,48 +2,59 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench harness must stay self-auditing: the baseline harvester has to
-  * recover per-query times from the driver's TRUNCATED tail captures (every
-  * BENCH_r1..r9 artifact stored only ~2000 chars of stdout with escaped
-  * quotes), or the 3× contention-rerun heuristic silently never fires. */
+/** The bench harness must stay self-auditing: the baseline reader has to
+  * return per-query times, and only those, from the committed records, or
+  * the run-count policy and Verify's cheapest-first order key on the wrong
+  * numbers without any failure to show it. */
 class BenchSpec extends AnyFunSuite {
-
-  test("previousRoundTimes harvests query times from a truncated escaped tail") {
-    val dir = java.nio.file.Files.createTempDirectory("benchspec").toFile
-    // mimics the driver wrapper: JSON file whose `tail` value is the escaped
-    // LAST chunk of stdout, starting mid-entry like the real artifacts
-    val wrapper =
-      """{
-        |  "n": 9,
-        |  "rc": 0,
-        |  "cpus": 32,
-        |  "sf": 0.1,
-        |  "tail": "ivors\":2.667569319,\"dedup_ngram\":1.501970966,\"a1_sum_1d\":0.25,\"w1_count_1h\":0.5,\"text_stats\":1.25,\"sim_topk\":0.125,\"pipeline_e2e\":20.25\"",
-        |  "parsed": null
-        |}""".stripMargin
-    java.nio.file.Files.write(new java.io.File(dir, "BENCH_r09.json").toPath,
-      wrapper.getBytes("UTF-8"))
-    val times = Bench.previousRoundTimes(dir.getAbsolutePath)
-    assert(times("dedup_ngram") == 1.501970966)
-    assert(times("pipeline_e2e") == 20.25)
-    // wrapper keys are harvested too but can never shadow a query name —
-    // lookups at the use site go through real query names only
-    assert(times.size >= 7)
-  }
 
   test("baseline readers parse exponent-notation times") {
     val dir = java.nio.file.Files.createTempDirectory("benchspec-exp").toFile
     java.nio.file.Files.write(new java.io.File(dir, "BENCH_r01.json").toPath,
-      ("""{"tail": "\"a1_sum_1d\":8.5E-4,\"a2\":1.5e+2,\"a3\":2E1,""" +
-        """\"a4\":0.25,\"a5\":-3.0e-1,\"a6\":7\""}""").getBytes("UTF-8"))
+      ("""{"parsed": {"queries": {"a1_sum_1d":8.5E-4,"a2":1.5e+2,"a3":2E1,""" +
+        """"a4":0.25,"a5":-3.0e-1,"a6":7}}}""").getBytes("UTF-8"))
     val times = Bench.previousRoundTimes(dir.getAbsolutePath)
     assert(times("a1_sum_1d") == 8.5e-4)
     assert(times("a2") == 150.0 && times("a3") == 20.0 && times("a5") == -0.3)
-    val full = new java.io.File(dir, "BENCH_FULL_local.json")
-    java.nio.file.Files.write(full.toPath,
+    val fullDir = java.nio.file.Files.createTempDirectory("benchspec-exp2").toFile
+    java.nio.file.Files.write(new java.io.File(fullDir, "BENCH_FULL_local.json").toPath,
       """{"queries":{"w1_count_1h":1.25E-3,"f5_multi_rule":2.5}}""".getBytes("UTF-8"))
-    assert(Bench.fullRecordTimes(full) ==
+    assert(Bench.previousRoundTimes(fullDir.getAbsolutePath) ==
       Map("w1_count_1h" -> 1.25e-3, "f5_multi_rule" -> 2.5))
+  }
+
+  test("previousRoundTimes reads query times, not calibration factors or " +
+      "tail harvests, from records shaped as the committed ones") {
+    val dir = java.nio.file.Files.createTempDirectory("benchspec-shapes").toFile
+    // BENCH_FULL_local.json: the full queries object, then the calibration
+    // map keyed by the same names
+    java.nio.file.Files.write(new java.io.File(dir, "BENCH_FULL_local.json").toPath,
+      ("""{"metric":"total","value":9.1,"unit":"sec","queries":{""" +
+        """"a10_p95_1d":0.587,"mm_meta":0.12,"sample_bernoulli":0.12,""" +
+        """"pipeline_e2e":8.1,"text_stats":0.17},"calibration":{""" +
+        """"a10_p95_1d":1.02,"mm_meta":0.96,"sample_bernoulli":0.96,""" +
+        """"pipeline_e2e":1.01,"text_stats":0.99},"calib_median_sec":0.0308,""" +
+        """"sf":"sf0.1","throughput_eps":1126599}""").getBytes("UTF-8"))
+    // a driver artifact: the tail's truncated verbose line carries the
+    // calibration map; parsed.queries is the compact line's top-N and _other
+    java.nio.file.Files.write(new java.io.File(dir, "BENCH_r18.json").toPath,
+      ("""{"n": 18, "rc": 0, "cpus": 32, "sf": 0.1, "tail": "_clean\":0.81,""" +
+        """\"mm_meta\":0.96,\"sample_bernoulli\":0.96},\"calib_median_sec\":0.0308}\n""" +
+        """{\"metric\":\"total\",\"value\":9.0,\"queries\":{\"pipeline_e2e\":7.9}}",""" +
+        """ "parsed": {"metric":"total","value":9.0,"unit":"sec","queries":{""" +
+        """"pipeline_e2e":7.9,"dedup_ngram":1.5,"text_langid":1.2,""" +
+        """"sim_topk":0.9,"graph_pagerank":4.3,"_other+288":2.5},""" +
+        """"loadavg":[1.1,1.3],"calib_median_sec":0.0308,"sf":"sf0.1"}}""")
+        .getBytes("UTF-8"))
+    val t = Bench.previousRoundTimes(dir.getAbsolutePath)
+    // not in parsed.queries: the full record's time, whatever the tail holds
+    assert(t("mm_meta") == 0.12 && t("sample_bernoulli") == 0.12)
+    assert(t("a10_p95_1d") == 0.587 && t("text_stats") == 0.17)
+    // in parsed.queries: the newest driver record wins
+    assert(t("pipeline_e2e") == 7.9 && t("graph_pagerank") == 4.3)
+    // no wrapper, calibration or line-level key reads as a query
+    Seq("n", "rc", "cpus", "value", "calib_median_sec", "throughput_eps")
+      .foreach(k => assert(!t.contains(k), k))
   }
 
   test("previousRoundTimes returns empty when no artifact has enough entries") {
@@ -62,41 +73,6 @@ class BenchSpec extends AnyFunSuite {
     Seq(0.001, 0.06, 1.23, 9.49, 20.25, 99.9, 123.4, 999.0).foreach { v =>
       assert(Bench.sig3(v).length <= 5 && !Bench.sig3(v).toLowerCase.contains("e"))
     }
-  }
-
-  test("ms renders the compact-line integer milliseconds, keeping the -1 marker") {
-    assert(Bench.ms(0.2104) == "210")
-    assert(Bench.ms(1.2345) == "1235" && Bench.ms(20.25) == "20250")
-    assert(Bench.ms(-1.0) == "-1")
-  }
-
-  test("compactQueries groups ≥3-member families and round-trips exactly") {
-    val in = Seq("text_stats" -> 0.21, "text_langid" -> 1.2, "text_pii" -> 0.05,
-      "a1_sum_1d" -> 0.1, "a2_count_1d" -> 0.2, "w1_count_1h" -> -1.0)
-    val s = Bench.compactQueries(in)
-    // text_* folds (3 members); a*/w* families are <3 and stay flat
-    assert(s.contains(""""text":{"langid":1200,"pii":50,"stats":210}"""), s)
-    assert(s.contains(""""a1_sum_1d":100""") && s.contains(""""w1_count_1h":-1"""), s)
-    // valid JSON shape: balanced braces, no trailing commas
-    assert(s.count(_ == '{') == s.count(_ == '}') && !s.contains(",}"), s)
-  }
-
-  test("compactQueries caps at topN slowest, folding the rest into family sums") {
-    val in = Seq("text_stats" -> 0.2, "text_langid" -> 1.2, "text_pii" -> 0.05,
-      "text_norm" -> 0.01, "a1_sum_1d" -> 0.1, "a2_count_1d" -> 9.0,
-      "w1_count_1h" -> -1.0)
-    val s = Bench.compactQueries(in, topN = 2)
-    // top-2 slowest = a2 (9.0), text_langid (1.2); the failure ALWAYS shows
-    assert(s.contains(""""langid":1200"""), s)
-    assert(s.contains(""""a2_count_1d":9000"""), s)
-    assert(s.contains(""""w1_count_1h":-1"""), s)
-    // the three unlisted text_* queries fold into one "+3" sum (260 ms)
-    assert(s.contains(""""+3":260"""), s)
-    // flat-family rest entry carries the family prefix
-    assert(!s.contains("a1_sum_1d") && s.contains(""""a1+1":100"""), s)
-    assert(s.count(_ == '{') == s.count(_ == '}') && !s.contains(",}"), s)
-    // default topN keeps every entry individually (legacy behavior)
-    assert(Bench.compactQueries(in).contains(""""stats":200"""))
   }
 
   test("the final line of record fits a 2000-char tail capture with headroom " +
@@ -175,18 +151,29 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.calibrationProbe(1000000L) > 0.0)
   }
 
-  test("Verify.fullBenchTimes harvests the full-precision local record first") {
+  test("previousRoundTimes harvests the full-precision local record first") {
     val dir = java.nio.file.Files.createTempDirectory("verifyspec").toFile
     java.nio.file.Files.write(new java.io.File(dir, "BENCH_FULL_local.json").toPath,
       ("{\"metric\":\"total\",\"value\":260.5,\"unit\":\"sec\",\"queries\":{" +
         "\"a1_sum_1d\":0.25,\"pipeline_e2e\":36.9,\"text_stats\":1.25," +
         "\"sim_topk\":2.7,\"dedup_ngram\":1.5,\"w1_count_1h\":0.5}," +
         "\"sf\":\"/root/testdata/sf0.1\"}").getBytes("UTF-8"))
-    val t = Verify.fullBenchTimes(dir.getAbsolutePath)
+    val t = Bench.previousRoundTimes(dir.getAbsolutePath)
     assert(t("pipeline_e2e") == 36.9 && t("a1_sum_1d") == 0.25)
     // an absent record falls back (empty dir -> previousRoundTimes -> empty)
     val empty = java.nio.file.Files.createTempDirectory("verifyspec2").toFile
-    assert(Verify.fullBenchTimes(empty.getAbsolutePath).isEmpty)
+    assert(Bench.previousRoundTimes(empty.getAbsolutePath).isEmpty)
+  }
+
+  test("Verify's oracle_sql.json reads back with Jackson as SparkEntry.oracleSql") {
+    val dir = java.nio.file.Files.createTempDirectory("verify-oracle").toFile
+    Verify.writeOracleSql(dir.getAbsolutePath)
+    import scala.jdk.CollectionConverters._
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
+      new java.io.File(dir, "oracle_sql.json"), classOf[java.util.Map[String, String]])
+      .asScala.toMap
+    assert(back.size == SparkEntry.oracleSql.size)
+    SparkEntry.oracleSql.foreach { case (k, v) => assert(back.get(k).contains(v), k) }
   }
 
   test("budget-exhausted sweep still emits a parseable partial compact line") {
